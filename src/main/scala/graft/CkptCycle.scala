@@ -1,34 +1,81 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import java.util.concurrent.ConcurrentHashMap
 
-/** Deterministic storage hygiene for queries that RETURN a checkpointed
-  * frame (corpus pipeline, connected components): the caller holds the
-  * frame, so the query can't free its own blocks — and the ContextCleaner
-  * only reclaims them at some later driver GC. Across a 116-query × 2-pass
-  * bench that nondeterministic reclaim shows up as warm runs slower than
-  * cold (executor storage carries every previous invocation's blocks).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** The one module that materializes a frame or frees its blocks.
   *
-  * [[cycle]] registers the frame under a stable key and frees the PREVIOUS
-  * frame registered under that key — each query invocation cleans up after
-  * its predecessor, bounding live checkpoint storage at one invocation per
-  * key without touching the frame the current caller holds.
+  * WHEN TO MATERIALIZE. A frame read by several consumers re-runs its whole
+  * subtree per consumer unless it is pinned. Two forms:
+  *  - [[pin]] (eager localCheckpoint, one dedicated job) is REQUIRED when
+  *    the consumers may be submitted concurrently by AQE — the two exchange
+  *    legs of a self-join, a/b sides of a pair search: a lazy cache races
+  *    its own fill, both legs compute the subtree (the r21 containment A/B
+  *    measured execute 0.84-1.09 s lazy vs 0.39-0.63 s eager). It is also
+  *    the only safe form for a frame whose lineage reads a warehouse table
+  *    the caller is about to swap: after the swap the lazy plan would hit
+  *    FILE_NOT_EXIST.
+  *  - [[cycleCached]] (lazy persist) is right instead when the FIRST
+  *    consumer scans the whole frame anyway (a probe broadcast over the
+  *    full batch): the cache fills inside that job, no materialization job
+  *    is launched, and the lineage stays intact (an evicted block
+  *    recomputes instead of failing).
+  *
+  * WHO FREES THE BLOCKS. The ContextCleaner only reclaims checkpoint blocks
+  * at some later driver GC; across a 2-pass bench that nondeterministic
+  * reclaim shows up as warm runs slower than cold. So every pinned frame
+  * has a deterministic owner:
+  *  - [[materialized]] — the frame lives inside one call; its blocks are
+  *    released in `finally`.
+  *  - [[cycle]] / [[cycleCached]] — the frame is RETURNED to a caller, so
+  *    the query cannot free it. It is registered under a stable key, and
+  *    registering the key again frees the PREVIOUS frame's blocks: each
+  *    invocation cleans up after its predecessor.
+  *  - [[release]] — a loop that supersedes its own earlier round.
   *
   * CONTRACT — single live frame per (session, key): cycling key K frees the
   * blocks of the frame previously cycled under K, whose lineage is truncated
-  * (localCheckpoint) and CANNOT recompute. A caller that still holds the
-  * earlier frame must not re-execute it after a newer frame is cycled under
-  * the same key; use distinct keys for concurrently-live results. Keys are
-  * scoped to the owning SparkSession, so identically-named queries in
-  * different sessions (tests vs mains) never unpersist across sessions.
+  * and CANNOT recompute. A caller that still holds the earlier frame must
+  * not re-execute it after a newer frame is cycled under the same key; use
+  * distinct keys for concurrently-live results ([[callSiteKey]] gives one
+  * per call site). Keys are scoped to the owning SparkSession, so
+  * identically-named queries in different sessions (tests vs mains) never
+  * unpersist across sessions.
   */
 object CkptCycle {
 
-  private val last =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
-  private val lastCached =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val last = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val lastCached = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** Eagerly materialize `df` into local checkpoint blocks (one job) and
+    * return the truncated-lineage frame. The caller owns the blocks: free
+    * them with [[release]], or hand the frame to [[cycle]].
+    */
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
+  /** Free the checkpoint blocks under `df`'s plan. Reliable-checkpoint
+    * RDDs are files, not blocks; unpersist on them is a harmless no-op. A
+    * stopped context has already dropped all blocks — and unpersist against
+    * it throws — so that case is skipped.
+    */
+  def release(df: DataFrame): Unit =
+    if (!df.sparkSession.sparkContext.isStopped)
+      df.queryExecution.analyzed.foreach {
+        case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+        case _              => ()
+      }
+
+  /** [[pin]] `df`, run `body` over the pinned frame, and [[release]] its
+    * blocks when `body` returns or throws. `body` must finish every action
+    * over the frame before it returns.
+    */
+  def materialized[T](df: DataFrame)(body: DataFrame => T): T = {
+    val pinned = pin(df)
+    try body(pinned) finally release(pinned)
+  }
 
   /** Free the blocks of EVERY frame registered for `spark` and forget the
     * keys — inter-query hygiene for a harness (Bench) that knows no cycled
@@ -36,17 +83,12 @@ object CkptCycle {
     * after release, a previously returned frame cannot recompute; the next
     * invocation of its query builds and registers a fresh one.
     */
-  def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def releaseAll(spark: SparkSession): Unit = {
     val it = last.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 eq spark) {
-        val df = e.getValue
-        if (!spark.sparkContext.isStopped)
-          df.queryExecution.analyzed.foreach {
-            case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-            case _              => ()
-          }
+        release(e.getValue)
         it.remove()
       }
     }
@@ -66,46 +108,41 @@ object CkptCycle {
     * never collide — the safe default for operators that checkpoint
     * internally, where a shared default key would let two concurrently-live
     * results silently free each other's truncated-lineage blocks.
-    * `skipClassPrefixes` names the operator's own classes so the key lands
-    * on its caller, not on an internal frame.
+    *
+    * The key lands on the caller of the class that asks for it: every frame
+    * of that class (its outer class name up to the first `$`, so companion,
+    * nested and lambda frames too) is skipped. Call it on the calling
+    * thread — inside a `Future` the stack no longer reaches the caller.
     */
-  def callSiteKey(prefix: String, skipClassPrefixes: String*): String = {
+  def callSiteKey(prefix: String): String = {
     val st = Thread.currentThread().getStackTrace
-    val f = st.drop(1).find { e =>
+    val outside = st.filterNot { e =>
       val cn = e.getClassName
-      !cn.startsWith("java.") && !cn.startsWith("jdk.") &&
-      !cn.startsWith("graft.CkptCycle") &&
-      !skipClassPrefixes.exists(cn.startsWith)
-    }.getOrElse(st.last)
+      cn.startsWith("java.") || cn.startsWith("jdk.") || cn.startsWith("graft.CkptCycle")
+    }
+    val owner = outside.headOption.map(_.getClassName.takeWhile(_ != '$'))
+    val f = outside.find(e => !owner.exists(e.getClassName.startsWith)).getOrElse(st.last)
     s"$prefix@${f.getClassName}:${f.getLineNumber}"
   }
 
-  /** The LAZY-cache sibling of [[cycle]] for multi-consumer frames whose
-    * FIRST consumer scans the whole frame anyway (e.g. a probe broadcast
-    * over the full batch): `persist` fills inside that consumer's job, so
-    * no dedicated materialization job is ever launched — where an eager
-    * localCheckpoint pays one — and the lineage stays intact (an evicted
-    * block recomputes instead of failing). Same single-live-frame cycling:
-    * registering key K unpersists the frame previously registered under K.
+  /** The lazy-cache sibling of [[cycle]] (see the class doc for when it is
+    * the right form). Same single-live-frame cycling: registering key K
+    * unpersists the frame previously registered under K.
     */
   def cycleCached(key: String, df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     val prev = lastCached.put((df.sparkSession, key), df)
     if (prev != null && (prev ne df) && !prev.sparkSession.sparkContext.isStopped)
       prev.unpersist(blocking = false)
     df
   }
 
+  /** Register `df` under `key` and free the blocks of the frame previously
+    * registered under it (see the CONTRACT above).
+    */
   def cycle(key: String, df: DataFrame): DataFrame = {
     val prev = last.put((df.sparkSession, key), df)
-    // A stopped context has already dropped all blocks — and unpersist
-    // against it throws; skip rather than crash the successor query.
-    if (prev != null && (prev ne df) && !prev.sparkSession.sparkContext.isStopped) {
-      prev.queryExecution.analyzed.foreach {
-        case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-        case _              => ()
-      }
-    }
+    if (prev != null && (prev ne df)) release(prev)
     df
   }
 }

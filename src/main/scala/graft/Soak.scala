@@ -733,15 +733,15 @@ object Soak {
       }
       def runPercentile(dir: String): Unit = {
         val out = tmp("soak-pct-out"); val rej = tmp("soak-pct-rej")
-        val thr = graft.operators.Curation.qualityScore(docs(dir), "text",
-            Seq("a", "the"), keepThreshold = Long.MinValue)
+        CkptCycle.materialized(graft.operators.Curation.qualityScore(docs(dir),
+            "text", Seq("a", "the"), keepThreshold = Long.MinValue)
           .groupBy(col("lang"))
           .agg(expr("CAST(percentile_approx(score, 0.5) AS BIGINT)")
-            .as("score_threshold"))
-          .localCheckpoint(true)
-        (0 until 3).foreach { i =>
-          Streams.percentileGateBatch(batch(dir, i), thr, out, rej,
-            i.toLong, "text", "lang", Seq("a", "the"))
+            .as("score_threshold"))) { thr =>
+          (0 until 3).foreach { i =>
+            Streams.percentileGateBatch(batch(dir, i), thr, out, rej,
+              i.toLong, "text", "lang", Seq("a", "the"))
+          }
         }
       }
       def runSubstring(dir: String): Unit = {
@@ -775,7 +775,7 @@ object Soak {
           val out0 = tmp("soak-subl-out")
           val all = docs(dir)
           val held = (0 until 3).map { i =>
-            all.filter(pmod(col("doc_id"), lit(m)) === i).localCheckpoint(true)
+            CkptCycle.pin(all.filter(pmod(col("doc_id"), lit(m)) === i))
           }
           // steady-state index: everything outside the held-out slices,
           // ingested once, untimed
@@ -855,13 +855,13 @@ object Soak {
           val wh0 = graft.airbnb.Warehouse(spark, tmp("soak-kgl-wh"))
           val out0 = tmp("soak-kgl-out")
           val all = emb(dir)
-          val tagged = graft.operators.KMeans.assignWith(all, "vec_id",
-              "embedding", cents)
+          val tagged = CkptCycle.pin(graft.operators.KMeans.assignWith(all,
+              "vec_id", "embedding", cents)
             .filter(pmod(col("vec_id"), lit(97)) === 0 && col("cluster") < 3)
-            .select(col("vec_id"), col("cluster")).localCheckpoint(true)
+            .select(col("vec_id"), col("cluster")))
           val bs = (0 until 3).map { i =>
-            all.join(tagged.filter(col("cluster") === i).select("vec_id"),
-              Seq("vec_id"), "left_semi").localCheckpoint(true)
+            CkptCycle.pin(all.join(tagged.filter(col("cluster") === i)
+              .select("vec_id"), Seq("vec_id"), "left_semi"))
           }
           // steady-state corpus: everything outside the held-out batches,
           // ingested once, untimed

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.CkptCycle
 import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -398,20 +399,14 @@ object Dedup {
     // stage deletes the per-row array_sort the a-side join leg re-ran on
     // every doc's full hash array (FixedCostProbe priced that leg equal to
     // the b-side's full explode); the b side is order-insensitive (set).
-    // EAGER localCheckpoint, deliberately NOT cycleCached (r21 A/B): the
-    // two join legs are submitted CONCURRENTLY by AQE, so a lazy cache
-    // races its own fill — both legs computed the kernel pass and the
-    // probe measured execute 0.84-1.09 s vs 0.39-0.63 s with the eager
-    // form (the serve gate differs: its probe strictly precedes the
-    // verify, so the lazy cache wins there).
-    val hs = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.containmentSketchPairs",
-        "graft.operators.Dedup"),
-      df.select(col(idCol).as("__id"),
+    // Eager: the two join legs run concurrently — this site's r21 A/B is
+    // the measurement behind the CkptCycle rule.
+    val hs = CkptCycle.cycle(
+      CkptCycle.callSiteKey("Dedup.containmentSketchPairs"),
+      CkptCycle.pin(df.select(col(idCol).as("__id"),
           array_sort(graft.functions.SketchFns.winnowFingerprints(toks, k, 1))
             .as("__hs"))
-        .filter(size(col("__hs")) > 0)
-        .localCheckpoint(true))
+        .filter(size(col("__hs")) > 0)))
     val a = hs.select(col("__id").as("a_id"),
         slice(col("__hs"), 1, bottomK).as("__bk"))
       .withColumn("nbk", size(col("__bk")).cast(LongType))
@@ -455,11 +450,9 @@ object Dedup {
     // two serial scan+tokenize passes off the one-row-group fixture scan
     // (the 271 ms 1-task stage FixedCostProbe measured); sample-bounded,
     // and spread is identity where the scan already parallelizes
-    val s = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.lshRecallEval",
-        "graft.operators.Dedup"),
-      graft.Tables.spread(s0.select(col(idCol), col(textCol)))
-        .localCheckpoint(true))
+    val s = CkptCycle.cycle(
+      CkptCycle.callSiteKey("Dedup.lshRecallEval"),
+      CkptCycle.pin(graft.Tables.spread(s0.select(col(idCol), col(textCol)))))
     val exact = ngramJaccardPairs(s, idCol, textCol, k, threshold)
       .select(col("a_id"), col("b_id"), lit(1).as("__e"))
     val lsh = minhashLshPairs(s, idCol, textCol, k, threshold, bands)
@@ -762,14 +755,11 @@ object Dedup {
     // ~230 ms 1-task stages per run at sf0.1 — the fixture scan is one row
     // group). Checkpoint it once — the method-matrix shared-base idiom; at
     // scale this is the SemDeDup assignment table every implementation
-    // materializes (it is the index), and the eager form is required: AQE
-    // submits the a/b exchange jobs concurrently, so a lazy cache races
-    // its own fill (the r21 containment A/B, commit 6eca6de).
-    val m = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("semDedup_m", "graft.operators.Dedup"),
-      KMeans.assignmentsQ(df, idCol, embCol, k, passes)
-        .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-        .localCheckpoint(true))
+    // materializes (it is the index).
+    val m = CkptCycle.cycle(
+      CkptCycle.callSiteKey("semDedup_m"),
+      CkptCycle.pin(KMeans.assignmentsQ(df, idCol, embCol, k, passes)
+        .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))))
     val a = m.select(col(idCol).as("a_id"), col("cluster"),
       col("dist").as("a_dist"), col("__u").as("ae"), col("__n").as("an"))
     val b = m.select(col(idCol).as("b_id"), col("cluster"),
@@ -869,13 +859,12 @@ object Dedup {
     // hash per start position INCLUDING short tails; positions past n-k are
     // cut so every surviving hash covers exactly k tokens. posexplode gives
     // the 0-based start; +1 makes offsets 1-based (oracle list indexing).
-    // Checkpointed ONCE under the CkptCycle per-call-site contract: the
-    // stage feeds the occurrence aggregate AND the prefilter join, and
-    // unshared each consumer re-runs the serial scan→tokenize→ChunkHashes
-    // kernel stage (FixedCostProbe measured it twice at 533 + 367 ms of a
-    // 1.67 s warm). Same tradeoff ngramShingleStage documents: (long,
-    // long, long) rows cost ~24 bytes per token position vs re-tokenizing
-    // the corpus once per consumer.
+    // Checkpointed ONCE: the stage feeds the occurrence aggregate AND the
+    // prefilter join, and unshared each consumer re-runs the serial
+    // scan→tokenize→ChunkHashes kernel stage (FixedCostProbe measured it
+    // twice at 533 + 367 ms of a 1.67 s warm). Same tradeoff
+    // ngramShingleStage documents: (long, long, long) rows cost ~24 bytes
+    // per token position vs re-tokenizing the corpus once per consumer.
     // spread: the tokenize+ChunkHashes kernel is this family's heaviest map
     // stage; fused onto an unsplittable one-row-group scan it runs serial
     // (measured: 323 ms 1-task checkpoint stage; with the spread the same
@@ -883,11 +872,9 @@ object Dedup {
     // incremental gates' probe/index sides sit behind broadcast-join plans
     // where an extra shuffle only adds jobs (A/B measured a wash-to-loss).
     // At scale the scan is wide and spread is the identity.
-    val base = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.repeatedSpans",
-        "graft.operators.Dedup"),
-      positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)
-        .localCheckpoint(true))
+    val base = CkptCycle.cycle(
+      CkptCycle.callSiteKey("Dedup.repeatedSpans"),
+      CkptCycle.pin(positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)))
     val shared = base.groupBy(col("sh")).agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") >= 2L &&
         (if (maxOccurrences > 0L) col("__occ") <= maxOccurrences else lit(true)))
@@ -994,15 +981,13 @@ object Dedup {
     // recomputed it a third time — with micro-batches that was two extra
     // near-batch-size kernel passes per trigger. The checkpoint is
     // batch-bounded (three longs per token position), the count scans the
-    // materialized blocks, and the join reads them again; CkptCycle frees
-    // the previous batch's blocks at the next call from this site.
+    // materialized blocks, and the join reads them again.
     val newA0 = positionalAnchors(newDf, idCol, textCol, k)
     val newA =
       if (maxBroadcastAnchors <= 0L) newA0
-      else graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey("Dedup.tagSpansAgainstIndex",
-          "graft.operators.Dedup"),
-        newA0.localCheckpoint(true))
+      else CkptCycle.cycle(
+        CkptCycle.callSiteKey("Dedup.tagSpansAgainstIndex"),
+        CkptCycle.pin(newA0))
     // island columns: a_id = NEW doc (pa = its position), b_id = index doc
     val aSide = newA.select(col(idCol).as("a_id"), col("pos").as("pa"), col("sh"))
     val bSide = index.select(col(idCol).as("b_id"), col("pos").as("pb"), col("sh"))
@@ -1074,14 +1059,12 @@ object Dedup {
     // broadcast-bounded and an extra shuffle only adds job launches.
     val spreadDf = graft.Tables.spread(df)
     val sp = sparseAnchors(spreadDf, idCol, textCol, k, w)
-    val cand = sp.select(col(idCol).as("a_id"), col("sh"))
-      .join(sp.select(col(idCol).as("b_id"), col("sh")), "sh")
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
-      .localCheckpoint(true)
-    val candFrame = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.repeatedSpansSparse",
-        "graft.operators.Dedup"), cand)
+    val candFrame = CkptCycle.cycle(
+      CkptCycle.callSiteKey("Dedup.repeatedSpansSparse"),
+      CkptCycle.pin(sp.select(col(idCol).as("a_id"), col("sh"))
+        .join(sp.select(col(idCol).as("b_id"), col("sh")), "sh")
+        .filter(col("a_id") < col("b_id"))
+        .select(col("a_id"), col("b_id")).distinct()))
     val candDocs = candFrame.select(col("a_id").as(idCol))
       .unionByName(candFrame.select(col("b_id").as(idCol))).distinct()
     // Dense verify off the SPREAD frame (round 22): joined against the raw
@@ -1180,9 +1163,9 @@ object Dedup {
         fastB(pairsLocal.map(_._2).distinct), cand = None, idCol, k,
         minSpanTokens, broadcastA = true)
     } else {
-      val cand = graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey(ckptKey, "graft.operators.Dedup"),
-        probe.distinct().localCheckpoint(true)).hint("broadcast")
+      val cand = CkptCycle.cycle(
+        CkptCycle.callSiteKey(ckptKey),
+        CkptCycle.pin(probe.distinct())).hint("broadcast")
       sparseVerify(distA(cand.select(col("a_id").as(idCol)).distinct()),
         distB(cand.select(col("b_id").as(idCol)).distinct()),
         Some(cand), idCol, k, minSpanTokens)
@@ -1230,12 +1213,10 @@ object Dedup {
   def tagSpansSplit(df: DataFrame, histPred: Column, idCol: String,
       textCol: String, k: Int, minSpanTokens: Int,
       maxOccurrences: Long = 0L): DataFrame = {
-    val rows = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.tagSpansSplit",
-        "graft.operators.Dedup"),
-      positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)
-        .withColumn("__hist", histPred)
-        .localCheckpoint(true))
+    val rows = CkptCycle.cycle(
+      CkptCycle.callSiteKey("Dedup.tagSpansSplit"),
+      CkptCycle.pin(positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)
+        .withColumn("__hist", histPred)))
     val idx0 = rows.filter(col("__hist"))
     val idx =
       if (maxOccurrences <= 0L) idx0
@@ -1259,12 +1240,10 @@ object Dedup {
     require(minSpanTokens >= w + k - 1,
       s"winnowing guarantee needs minSpanTokens >= w + k - 1: $minSpanTokens < ${w + k - 1}")
     val idType = df.schema(idCol).dataType
-    val rows = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.tagSpansSplitSparse",
-        "graft.operators.Dedup"),
-      anchorRowsFrame(graft.Tables.spread(df), idCol, textCol, k, w)
-        .withColumn("__hist", histPred)
-        .localCheckpoint(true))
+    val rows = CkptCycle.cycle(
+      CkptCycle.callSiteKey("Dedup.tagSpansSplitSparse"),
+      CkptCycle.pin(anchorRowsFrame(graft.Tables.spread(df), idCol, textCol, k, w)
+        .withColumn("__hist", histPred)))
     sparseProbeVerify(
       rows.filter(col("__hist") && col("sparse"))
         .select(col(idCol).as("b_id"), col("sh")),
@@ -1363,18 +1342,15 @@ object Dedup {
     // ONE kernel pass over the batch — lazily CACHED (r21), spread off the
     // unsplittable scan — feeds the probe broadcast AND the a-side verify
     // (the r17 shape tokenized the batch twice and history once per
-    // serve). cycleCached, not an eager localCheckpoint: the probe
-    // broadcast scans the whole frame first anyway, so the cache fills
-    // inside that job and the serve pays no dedicated materialization job
-    // (FixedCostProbe: the eager form held an extra job + a 73 ms
+    // serve). cycleCached: the probe broadcast scans the whole frame
+    // first (FixedCostProbe: the eager form held an extra job + a 73 ms
     // checkpoint stage on this row's 7-8-job floor-priced anatomy).
     // (r21 A/B: dropping the spread saves one AQE job but serializes the
     // batch kernel onto the unsplittable scan — probe read 254 ms 1-task
     // vs 114 ms scan + 49 ms wide kernel; net wash locally, and at scale
     // spread is the identity. Kept.)
-    val batchAnchors = graft.CkptCycle.cycleCached(
-      graft.CkptCycle.callSiteKey("Dedup.tagSpansAgainstIndexSparseServe",
-        "graft.operators.Dedup"),
+    val batchAnchors = CkptCycle.cycleCached(
+      CkptCycle.callSiteKey("Dedup.tagSpansAgainstIndexSparseServe"),
       anchorRowsFrame(graft.Tables.spread(newDf), idCol, textCol, k, w))
     sparseProbeVerify(
       idx.filter(col("sparse")).select(col(idCol).as("b_id"), col("sh")),
@@ -1488,11 +1464,9 @@ object Dedup {
                              maxOccurrences: Long = 0L): DataFrame = {
     require(k >= 2, s"k must be >= 2: $k")
     require(minSpanTokens >= k, s"minSpanTokens must be >= k: $minSpanTokens < $k")
-    val base = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.repeatedSpansWithinDoc",
-        "graft.operators.Dedup"),
-      positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)
-        .localCheckpoint(true))
+    val base = CkptCycle.cycle(
+      CkptCycle.callSiteKey("Dedup.repeatedSpansWithinDoc"),
+      CkptCycle.pin(positionalAnchors(graft.Tables.spread(df), idCol, textCol, k)))
     val shared = base.groupBy(col("sh")).agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") >= 2L &&
         (if (maxOccurrences > 0L) col("__occ") <= maxOccurrences else lit(true)))
@@ -1525,14 +1499,12 @@ object Dedup {
                        minSpanTokens: Int,
                        maxOccurrences: Long = 0L): DataFrame = {
     val spans = repeatedSpans(df, idCol, textCol, k, minSpanTokens, maxOccurrences)
-    graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("Dedup.coveredPositions",
-        "graft.operators.Dedup"),
-      spans
+    CkptCycle.cycle(
+      CkptCycle.callSiteKey("Dedup.coveredPositions"),
+      CkptCycle.pin(spans
         .select(col("b_id").as(idCol),
           explode(expr("sequence(start_b, start_b + len_tokens - 1)")).as("pos"))
-        .distinct()
-        .localCheckpoint(true))
+        .distinct()))
   }
 
   /** The rewrite half of [[repeatedSpans]] — Lee et al. 2022's keep-first

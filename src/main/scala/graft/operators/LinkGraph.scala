@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.CkptCycle
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -81,7 +82,7 @@ object LinkGraph {
           // a newer checkpoint cuts every plan's lineage to it — the
           // previously checkpointed rank frame is unreachable, free it
           val t = Components.truncate(next)
-          lastCkpt.foreach(Components.free)
+          lastCkpt.foreach(CkptCycle.release)
           lastCkpt = Some(t)
           t
         } else next
@@ -129,9 +130,8 @@ object LinkGraph {
         .filter(col("src") =!= col("dst")).distinct()
     val rows = e0.limit(maxDriverEdges.toInt + 1).collect()
     if (rows.length > maxDriverEdges) {
-      graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey("LinkGraph.pageRankAuto",
-          "graft.operators.LinkGraph"),
+      CkptCycle.cycle(
+        CkptCycle.callSiteKey("LinkGraph.pageRankAuto"),
         pageRank(edges, srcCol, dstCol, iters))
     } else {
       val deg = new java.util.HashMap[Long, Long]()
@@ -202,12 +202,12 @@ object LinkGraph {
         .join(dist.select(col("node")), Seq("node"), "left_anti")
         .select(col("node"), lit(h.toLong).as("hops"))
       dist = Components.truncate(dist.unionByName(discovered))
-      Components.free(prev)
+      CkptCycle.release(prev)
       prev = dist
     }
     // the returned table is its own checkpoint — the edge blocks are no
     // longer reachable from it
-    Components.free(e)
+    CkptCycle.release(e)
     dist
   }
 
@@ -239,9 +239,8 @@ object LinkGraph {
       .filter(col("node").isNotNull).distinct()
     val sRows = s0.limit(maxDriverEdges.toInt + 1).collect()
     if (eRows.length > maxDriverEdges || sRows.length > maxDriverEdges) {
-      graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey("LinkGraph.bfsHopsAuto",
-          "graft.operators.LinkGraph"),
+      CkptCycle.cycle(
+        CkptCycle.callSiteKey("LinkGraph.bfsHopsAuto"),
         bfsHops(edges, srcCol, dstCol, seeds, seedCol, maxHops))
     } else {
       val adj = new java.util.HashMap[Long, java.util.ArrayList[Long]]()

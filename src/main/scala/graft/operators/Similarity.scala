@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.CkptCycle
 import graft.functions.VectorFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -836,11 +837,10 @@ object Similarity {
     // the scan + quantize + assign kernel as its own serial stage (the
     // fixture scan is one row group); at scale this is the materialized
     // assignment table the pair search indexes anyway.
-    val m = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("contrastive_m", "graft.operators.Similarity"),
-      KMeans.assignmentsQ(df, idCol, embCol, k, passes)
-        .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
-        .localCheckpoint(true))
+    val m = CkptCycle.cycle(
+      CkptCycle.callSiteKey("contrastive_m"),
+      CkptCycle.pin(KMeans.assignmentsQ(df, idCol, embCol, k, passes)
+        .withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))))
     val a = m.select(col(idCol).as("anchor"), col("cluster"),
       col("__u").as("ae"), col("__n").as("an"))
     val b = m.select(col(idCol).as("other"), col("cluster"),
@@ -1011,9 +1011,9 @@ object Similarity {
     val cols = (Seq("node", "nbr", "sim") ++ carry).map(col)
     val touchedNodes = broadcast(newEdges.select(col("node")).distinct())
     val old = old0.select(cols: _*)
-    val touchedOld = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey(ckptKey, "graft.operators.Similarity"),
-      old.join(touchedNodes, Seq("node"), "left_semi").localCheckpoint(true))
+    val touchedOld = CkptCycle.cycle(
+      CkptCycle.callSiteKey(ckptKey),
+      CkptCycle.pin(old.join(touchedNodes, Seq("node"), "left_semi")))
     validateCapped(touchedOld, degree, requireCapped)
     val reranked = graft.plans.TopKPerGroup.topK(
         touchedOld.unionByName(newEdges.select(cols: _*)),
@@ -1057,17 +1057,16 @@ object Similarity {
       d.withColumn("__n", sqrt(VectorFns.dotQDouble(col("__u"), col("__u"))))
     // the assigned batch feeds FOUR consumers (touched cells, the mates
     // union, the a-side, and the broadcast's own subplan) — checkpointed
-    // once per the CkptCycle rule; it is batch-sized, never the corpus.
+    // once; it is batch-sized, never the corpus.
     // A caller that already holds the batch as a checkpoint (the gate,
     // which collected touched cells from it) says so — the norm column is
     // a cheap projection over the existing blocks, and a second
     // localCheckpoint would re-materialize the whole batch per merge.
     val bAssign =
       if (batchMaterialized) withNorms(batchA)
-      else graft.CkptCycle.cycle(
-        graft.CkptCycle.callSiteKey("mergeKnnGraph_batch",
-          "graft.operators.Similarity"),
-        withNorms(batchA).localCheckpoint(true))
+      else CkptCycle.cycle(
+        CkptCycle.callSiteKey("mergeKnnGraph_batch"),
+        CkptCycle.pin(withNorms(batchA)))
     // history vectors in touched cells only; norms compute AFTER the cell
     // filter, for survivors only. A caller that already knows the batch's
     // cells driver-side (the gate collected them for the partition-pruned
@@ -1116,12 +1115,9 @@ object Similarity {
           col("sim"), col("cluster")))).as("__e"))
       .select(col("__e.node").as("node"), col("__e.nbr").as("nbr"),
         col("__e.sim").as("sim"), col("__e.cluster").as("cluster"))
-    graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("mergeKnnGraph_newEdges",
-        "graft.operators.Similarity"),
-      bothDirs
-        .distinct()
-        .localCheckpoint(true))
+    CkptCycle.cycle(
+      CkptCycle.callSiteKey("mergeKnnGraph_newEdges"),
+      CkptCycle.pin(bothDirs.distinct()))
   }
 
   /** The merge precondition made loud on demand (`requireCapped = true`):
@@ -1308,13 +1304,11 @@ object Similarity {
     // the main thread builds the entry beam, and hop 1 awaits it. Actions
     // from two driver threads are ordinary concurrent Spark jobs; the
     // CkptCycle registry is a ConcurrentHashMap.
-    val gKey = graft.CkptCycle.callSiteKey("graphTopK_graph",
-      "graft.operators.Similarity")
-    val gFut = scala.concurrent.Future(graft.CkptCycle.cycle(gKey,
-      graph.select(col("node"), col("nbr")).localCheckpoint(true)))(
+    val gKey = CkptCycle.callSiteKey("graphTopK_graph")
+    val gFut = scala.concurrent.Future(CkptCycle.cycle(gKey,
+      CkptCycle.pin(graph.select(col("node"), col("nbr")))))(
       scala.concurrent.ExecutionContext.global)
-    val beamKey = graft.CkptCycle.callSiteKey("graphTopK_beam",
-      "graft.operators.Similarity")
+    val beamKey = CkptCycle.callSiteKey("graphTopK_beam")
     // Only the ENTRY beam is checkpointed (round 22). Later hops stay LAZY:
     // a hop's two consumers (neighbor join + union) duplicate its subtree in
     // the logical plan, but the subtrees are canonically identical, so AQE's
@@ -1331,7 +1325,7 @@ object Similarity {
     // OPTIMIZATION_r22.md.
     def ckptIfMoreHops(df: DataFrame, h: Int): DataFrame =
       if (h == 0 && hops > 0)
-        graft.CkptCycle.cycle(beamKey, df.localCheckpoint(true))
+        CkptCycle.cycle(beamKey, CkptCycle.pin(df))
       else df
     var beamDf = ckptIfMoreHops(graft.plans.TopKPerGroup.topK(
         score(qKeys.crossJoin(broadcast(entries))),
@@ -1416,9 +1410,9 @@ object Similarity {
     val sub = books(0)(0).length
     // the PQ-coded candidate table feeds every hop — materialized once
     // (a ~free checkpoint when the caller passes a persisted-index read)
-    val cIdx = graft.CkptCycle.cycle(
-      graft.CkptCycle.callSiteKey("graphTopKPQ_codes", "graft.operators.Similarity"),
-      codesIdx.select(col("c_id"), col("codes")).localCheckpoint(true))
+    val cIdx = CkptCycle.cycle(
+      CkptCycle.callSiteKey("graphTopKPQ_codes"),
+      CkptCycle.pin(codesIdx.select(col("c_id"), col("codes"))))
     val lutCol = concat((0 until m).map { j =>
       kernelCol(graft.plans.CellDotsQ(
         kernelExpr(slice(VectorFns.quantize(col("qe")), j * sub + 1, sub)),

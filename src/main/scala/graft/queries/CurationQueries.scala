@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{CkptCycle, Q, Tables}
 import graft.functions.TextFns
 import graft.operators.{Components, Curation, Dedup, Scd2}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -522,11 +522,10 @@ object CurationQueries {
         val docs = t(s, dir, "documents")
         val mid = docs.agg(expr("coalesce(MAX(doc_id) DIV 2, 0)").as("mid"))
           .collect()(0).getLong(0)
-        val scored = graft.CkptCycle.cycle("q_stream_percentile_batch_sc",
-          Curation.qualityScore(docs, "text", Seq("a", "the"),
+        val scored = CkptCycle.cycle("q_stream_percentile_batch_sc",
+          CkptCycle.pin(Curation.qualityScore(docs, "text", Seq("a", "the"),
               keepThreshold = Long.MinValue)
-            .select(col("doc_id"), col("lang"), col("score"))
-            .localCheckpoint(true))
+            .select(col("doc_id"), col("lang"), col("score"))))
         val thr = Curation.percentileThresholds(
           scored.filter(col("doc_id") < mid), "lang", "score",
           keepPermille = 400)
@@ -641,11 +640,10 @@ object CurationQueries {
         val docs = t(s, dir, "documents")
         val mid = docs.agg(expr("coalesce(MAX(doc_id) DIV 2, 0)").as("m"))
           .collect()(0).getLong(0)
-        val scored = graft.CkptCycle.cycle("q_quality_recalibrate_sc",
-          Curation.qualityScore(docs, "text", Seq("a", "the"),
+        val scored = CkptCycle.cycle("q_quality_recalibrate_sc",
+          CkptCycle.pin(Curation.qualityScore(docs, "text", Seq("a", "the"),
               keepThreshold = Long.MinValue)
-            .select(col("doc_id"), col("lang"), col("score"))
-            .localCheckpoint(true))
+            .select(col("doc_id"), col("lang"), col("score"))))
         val hist = scored.filter(col("doc_id") < mid)
         val fresh = scored.filter(col("doc_id") >= mid)
         val tOld = Curation.percentileThresholds(hist, "lang", "score", 400)
@@ -1317,7 +1315,7 @@ object CurationQueries {
       (s, dir) => {
         val pairs = Dedup.ngramJaccardPairs(t(s, dir, "documents"),
           "doc_id", "text", 4, 0.4)
-        graft.CkptCycle.cycle("q_dedup_components",
+        CkptCycle.cycle("q_dedup_components",
             Components.connectedComponents(pairs, "a_id", "b_id"))
           .orderBy(col("node"))
       },
@@ -1362,7 +1360,7 @@ object CurationQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 4, 0.4)
-        val comp = graft.CkptCycle.cycle("q_dedup_survivor_quality",
+        val comp = CkptCycle.cycle("q_dedup_survivor_quality",
           Components.connectedComponents(pairs, "a_id", "b_id"))
         val scored = Curation.qualityScore(docs, "text", Seq("a", "the"),
           keepThreshold = Long.MinValue)
@@ -1429,7 +1427,7 @@ object CurationQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 4, 0.4)
-        val comp = graft.CkptCycle.cycle("q_dedup_audit",
+        val comp = CkptCycle.cycle("q_dedup_audit",
           Components.connectedComponents(pairs, "a_id", "b_id"))
         val scored = Curation.qualityScore(docs, "text", Seq("a", "the"),
             keepThreshold = Long.MinValue)
@@ -1504,7 +1502,7 @@ object CurationQueries {
         // cycle() walks the whole analyzed tree, so the checkpoint leaf
         // under the survivors aggregate is found and the previous
         // invocation's blocks freed
-        graft.CkptCycle.cycle("q_dedup_survivors",
+        CkptCycle.cycle("q_dedup_survivors",
             Components.survivors(
               Components.connectedComponents(pairs, "a_id", "b_id")))
           .orderBy(col("survivor_id"))
@@ -1551,7 +1549,7 @@ object CurationQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 4, 0.4)
-        val comp = graft.CkptCycle.cycle("q_split_leakage_safe",
+        val comp = CkptCycle.cycle("q_split_leakage_safe",
           Components.connectedComponents(pairs, "a_id", "b_id"))
         docs.select(col("doc_id"))
           .join(comp.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
@@ -1650,13 +1648,12 @@ object CurationQueries {
         val out = graft.operators.CorpusPipeline.withPrepared(
             t(s, dir, "documents"), "doc_id", "text",
             graft.operators.CorpusPipeline.Config()) { r =>
-          r.corpus
-            .select(col("doc_id"), md5(col("text")).as("text_fp"), col("split"))
-            .localCheckpoint(true)
+          CkptCycle.pin(r.corpus
+            .select(col("doc_id"), md5(col("text")).as("text_fp"), col("split")))
         }
         // free the PREVIOUS invocation's checkpoint blocks (GC-driven reclaim
         // is too late across a 2-pass bench — warm measured slower than cold)
-        graft.CkptCycle.cycle("q_corpus_pipeline", out).orderBy(col("doc_id"))
+        CkptCycle.cycle("q_corpus_pipeline", out).orderBy(col("doc_id"))
       },
       Some(s"""
         WITH t0 AS (SELECT doc_id, text,

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.CkptCycle
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -384,15 +385,11 @@ object Streams {
     // that crashed after the index merge) — the self-collision guard
     val tags = graft.operators.Dedup.tagAgainstBandIndex(
       batch, idx.filter(col("batch_id") < batchId), idCol, textCol, k, bands)
-    // materialize survivors BEFORE the index swap: their lazy plan reads the
-    // index table, whose files the swap below replaces — a post-swap action
-    // on the un-checkpointed frame would FILE_NOT_EXIST. Micro-batch-sized,
-    // so the checkpoint is small; blocks are freed in the finally.
-    val survivors = batch.join(tags, Seq(idCol), "left")
-      .filter(!coalesce(col("is_near_dup"), lit(false)))
-      .drop("is_near_dup")
-      .localCheckpoint(true)
-    try {
+    // survivors are pinned BEFORE the index swap: their lazy plan reads the
+    // index table, whose files the swap below replaces. Micro-batch-sized.
+    CkptCycle.materialized(batch.join(tags, Seq(idCol), "left")
+        .filter(!coalesce(col("is_near_dup"), lit(false)))
+        .drop("is_near_dup")) { survivors =>
       // survivors' bands join the index under min-batch-id semantics; the
       // groupBy also re-distincts, so replays cannot grow the table
       val merged = idx.unionByName(
@@ -402,9 +399,6 @@ object Streams {
         .agg(min(col("batch_id")).as("batch_id"))
       wh.write(indexTable, merged)
       writeBatchIdempotent(survivors, outDir, batchId)
-    } finally survivors.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
   }
 
@@ -475,10 +469,9 @@ object Streams {
         .select(col("doc_id").as(idCol), col("pos"), col("sh")),
       idCol, textCol, k, minSpanTokens,
       maxBroadcastAnchors = maxBroadcastAnchors)
-    // materialize survivors once: they feed the index append AND the sink
-    val survivors = batch.join(tags.select(col(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint(true)
-    try {
+    // survivors feed the index append AND the sink
+    CkptCycle.materialized(
+        batch.join(tags.select(col(idCol)), Seq(idCol), "left_anti")) { survivors =>
       // the index GROWS BY THE BATCH's anchors only, landed as an
       // idempotent batch_id partition (r18): the r17 shape re-read and
       // re-wrote the WHOLE index through a groupBy-dedupe + table swap
@@ -493,9 +486,6 @@ object Streams {
             maxOccurrences)
           .select(col(idCol).as("doc_id"), col("pos"), col("sh")))
       writeBatchIdempotent(survivors, outDir, batchId)
-    } finally survivors.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
   }
 
@@ -566,12 +556,10 @@ object Streams {
       .join(broadcast(idx), "__sk")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shared_shingles"))
-    // materialize the tagged batch ONCE (semDedupGateBatch's survivor
-    // pattern): the quarantine and clean writes are two actions over it,
-    // and uncached each would re-run the tokenize + ShingleHashes +
-    // broadcast-join pipeline per write; micro-batch-sized blocks
-    val tagged = batch.join(hits, Seq(idCol), "left").localCheckpoint(true)
-    try {
+    // the quarantine and clean writes are two actions over the tagged
+    // batch; unpinned each would re-run the tokenize + ShingleHashes +
+    // broadcast-join pipeline per write
+    CkptCycle.materialized(batch.join(hits, Seq(idCol), "left")) { tagged =>
       val contaminated = tagged.filter(col("n_shared_shingles").isNotNull)
       val clean = tagged.filter(col("n_shared_shingles").isNull)
         .drop("n_shared_shingles")
@@ -582,9 +570,6 @@ object Streams {
       contaminated.write.mode("overwrite")
         .parquet(new Path(quarantineDir, f"batch-$batchId%09d").toString)
       writeBatchIdempotent(clean, outDir, batchId)
-    } finally tagged.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
   }
 
@@ -598,8 +583,8 @@ object Streams {
       indexTable: String, outDir: String, quarantineDir: String,
       checkpointDir: String, idCol: String, textCol: String, k: Int,
       queryName: String = "decontaminate_gate"): StreamingQuery = {
-    val idx = wh.readOrEmpty(indexTable,
-      StructType(Seq(StructField("__sk", LongType)))).localCheckpoint(true)
+    val idx = CkptCycle.pin(wh.readOrEmpty(indexTable,
+      StructType(Seq(StructField("__sk", LongType)))))
     docs.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
@@ -651,17 +636,14 @@ object Streams {
     if (fs.exists(new Path(dir, "_COMMITTED"))) return false
     val scored = graft.operators.Curation.qualityScore(batch, textCol,
       stopwords, keepThreshold = Long.MinValue).drop("keep")
-    // materialize the scored+tagged batch ONCE (the decontaminate-gate
-    // pattern): reject and clean writes are two actions over it
+    // reject and clean writes are two actions over the tagged batch.
     // null-safe on the group key (the Curation boundary-join contract): a
     // CALIBRATED null group gates like any other; only a group with no
     // threshold row rejects
-    val tagged = scored.join(
+    CkptCycle.materialized(scored.join(
         broadcast(thr.withColumnRenamed(groupCol, "__g")),
         col(groupCol) <=> col("__g"), "left")
-      .drop("__g")
-      .localCheckpoint(true)
-    try {
+      .drop("__g")) { tagged =>
       val kept = tagged.filter(col("score_threshold").isNotNull &&
         col("score") > col("score_threshold")).drop("score_threshold")
       val rejected = tagged.filter(col("score_threshold").isNull ||
@@ -672,9 +654,6 @@ object Streams {
       rejected.write.mode("overwrite")
         .parquet(new Path(rejectDir, f"batch-$batchId%09d").toString)
       writeBatchIdempotent(kept, outDir, batchId)
-    } finally tagged.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
   }
 
@@ -687,8 +666,7 @@ object Streams {
       checkpointDir: String, textCol: String, groupCol: String,
       stopwords: Seq[String],
       queryName: String = "percentile_gate"): StreamingQuery = {
-    val thr = wh.readOrEmpty(thresholdTable, thresholdSchema(groupCol))
-      .localCheckpoint(true)
+    val thr = CkptCycle.pin(wh.readOrEmpty(thresholdTable, thresholdSchema(groupCol)))
     docs.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
@@ -932,9 +910,8 @@ object Streams {
       .select(col(groupCol),
         (col("budget_tokens") - coalesce(col("__spent"), lit(0L)))
           .as("__remaining"))
-    val tagged = budgetSpendPlan(batch, remaining, idCol, textCol, groupCol,
-      stopwords).localCheckpoint(true)
-    try {
+    CkptCycle.materialized(budgetSpendPlan(batch, remaining, idCol, textCol,
+        groupCol, stopwords)) { tagged =>
       val kept = tagged.filter(col("__selected"))
         .drop("__remaining", "__cum", "__selected")
       val rejected = tagged.filter(!col("__selected"))
@@ -949,9 +926,6 @@ object Streams {
       rejected.write.mode("overwrite")
         .parquet(new Path(rejectDir, f"batch-$batchId%09d").toString)
       writeBatchIdempotent(kept, outDir, batchId)
-    } finally tagged.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
   }
 
@@ -982,17 +956,23 @@ object Streams {
     if (!fs.exists(base)) return // nothing to compact
     val target = new Path(base, f"fold-$uptoBatchId%09d")
     if (!fs.exists(new Path(target, "_SUCCESS"))) {
-      val folded = ledgerRows(spark, ledgerDir, groupCol, uptoBatchId)
-        .groupBy(col(groupCol)).agg(sum(col("spent")).as("spent"))
-        .withColumn("batch_id", lit(uptoBatchId - 1))
-        .localCheckpoint(true) // folded sums pinned BEFORE any file mutation
-      if (folded.isEmpty) return // no spend to fold
-      val tmp = new Path(base, f".fold-tmp-$uptoBatchId%09d")
-      fs.delete(tmp, true)
-      folded.write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(target, true) // uncommitted remnant only (checked above)
-      if (!fs.rename(tmp, target))
-        throw new java.io.IOException(s"ledger compaction: promote failed")
+      // folded sums pinned BEFORE any file mutation
+      val committed = CkptCycle.materialized(
+          ledgerRows(spark, ledgerDir, groupCol, uptoBatchId)
+            .groupBy(col(groupCol)).agg(sum(col("spent")).as("spent"))
+            .withColumn("batch_id", lit(uptoBatchId - 1))) { folded =>
+        if (folded.isEmpty) false
+        else {
+          val tmp = new Path(base, f".fold-tmp-$uptoBatchId%09d")
+          fs.delete(tmp, true)
+          folded.write.mode("overwrite").parquet(tmp.toString)
+          fs.delete(target, true) // uncommitted remnant only (checked above)
+          if (!fs.rename(tmp, target))
+            throw new java.io.IOException(s"ledger compaction: promote failed")
+          true
+        }
+      }
+      if (!committed) return // no spend to fold
     }
     // idempotent cleanup — the fold is committed, so readers already
     // ignore everything deleted here
@@ -1013,8 +993,7 @@ object Streams {
       ledgerDir: String, checkpointDir: String, idCol: String,
       textCol: String, groupCol: String, stopwords: Seq[String],
       queryName: String = "budget_gate"): StreamingQuery = {
-    val budgets = wh.readOrEmpty(budgetTable, budgetSchema(groupCol))
-      .localCheckpoint(true)
+    val budgets = CkptCycle.pin(wh.readOrEmpty(budgetTable, budgetSchema(groupCol)))
     docs.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
@@ -1095,13 +1074,11 @@ object Streams {
         VectorFns.dotQDouble(col("__u"), col("__iu")) / (col("__n") * col("__in")))
       .filter(round(col("cos"), 6) >= threshold)
       .select(col(idCol)).distinct()
-    // materialize survivors BEFORE the cell-table swap (same
-    // FILE_NOT_EXIST hazard as the band gate); micro-batch-sized
-    val survivors = batch.join(
+    // survivors pinned BEFORE the cell-table swap (same FILE_NOT_EXIST
+    // hazard as the band gate)
+    CkptCycle.materialized(batch.join(
         assigned.join(dropped, Seq(idCol), "left_anti")
-          .select(col(idCol), col("cluster"), col("__u")), Seq(idCol))
-      .localCheckpoint(true)
-    try {
+          .select(col(idCol), col("cluster"), col("__u")), Seq(idCol))) { survivors =>
       // survivors' cells merge under min-batch-id semantics; the groupBy
       // also re-distincts, so replays cannot grow the table
       val merged = wh.readOrEmpty(cellTable, cellIndexSchema).unionByName(
@@ -1111,9 +1088,6 @@ object Streams {
         .agg(min(col("batch_id")).as("batch_id"))
       wh.write(cellTable, merged)
       writeBatchIdempotent(survivors.drop("cluster", "__u"), outDir, batchId)
-    } finally survivors.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
   }
 
@@ -1207,36 +1181,28 @@ object Streams {
       StructField("cell", LongType)))
     val vecIdx = wh.readOrEmpty(vecTable, vecSchema)
     val g0 = wh.readOrEmpty(graphTable, graphSchema)
-    // assign the batch ONCE (batch-sized, checkpointed): it feeds the
-    // touched-cells collect, the vector-table append, and the merge.
-    // (isEmpty is itself a Spark job — evaluate it once per batch.)
-    val batchEmpty = batch.isEmpty
-    val bAssign =
-      if (batchEmpty) null
-      else graft.operators.KMeans.assignWith(
-          batch.select(col(idCol), col(embCol)), idCol, embCol, cents)
-        .select(col(idCol), col("cluster"), col("__u"))
-        .localCheckpoint(true)
-    // cells this batch lands in: one bounded collect (≤ k values — the
-    // centroid matrix is already driver-sized), needed driver-side to
-    // drive the partition-pruned read and the per-partition swap set
-    val touchedCells: Array[Long] =
-      if (batchEmpty) Array.empty
-      else bAssign.select(col("cluster")).distinct()
-        .collect().map(_.getLong(0))
-    // per-cell batch stamps, read from ONLY the touched partitions
-    // (partition-pruned): cells already stamped with this batch committed
-    // in a previous attempt's partial swap — skip them; re-merge the rest.
     // An empty micro-batch touches nothing; the sink marker alone commits.
-    val doneCells: Set[Long] =
-      if (touchedCells.isEmpty) Set.empty
-      else g0.filter(col("cell").cast(LongType).isin(touchedCells: _*))
-        .groupBy(col("cell").cast(LongType).as("cell"))
-        .agg(max(col("batch_id")).as("stamp"))
-        .filter(col("stamp") >= batchId)
-        .collect().map(_.getLong(0)).toSet
-    val remainCells = touchedCells.filterNot(doneCells)
-    try {
+    // A non-empty batch is assigned ONCE (batch-sized): it feeds the
+    // touched-cells collect, the vector-table append, and the merge.
+    if (!batch.isEmpty) CkptCycle.materialized(
+        graft.operators.KMeans.assignWith(
+            batch.select(col(idCol), col(embCol)), idCol, embCol, cents)
+          .select(col(idCol), col("cluster"), col("__u"))) { bAssign =>
+      // cells this batch lands in: one bounded collect (≤ k values — the
+      // centroid matrix is already driver-sized), needed driver-side to
+      // drive the partition-pruned read and the per-partition swap set
+      val touchedCells: Array[Long] = bAssign.select(col("cluster")).distinct()
+        .collect().map(_.getLong(0))
+      // per-cell batch stamps, read from ONLY the touched partitions
+      // (partition-pruned): cells already stamped with this batch committed
+      // in a previous attempt's partial swap — skip them; re-merge the rest.
+      val doneCells: Set[Long] =
+        g0.filter(col("cell").cast(LongType).isin(touchedCells: _*))
+          .groupBy(col("cell").cast(LongType).as("cell"))
+          .agg(max(col("batch_id")).as("stamp"))
+          .filter(col("stamp") >= batchId)
+          .collect().map(_.getLong(0)).toSet
+      val remainCells = touchedCells.filterNot(doneCells)
       if (remainCells.nonEmpty) {
         // history pre-assigned from STORED columns — cell filter + stored
         // quantized vectors, no distance kernel; at 100 TB the vector
@@ -1255,15 +1221,14 @@ object Streams {
           .filter(col("cell").cast(LongType).isin(remainCells: _*))
           .select(col("node"), col("nbr"), col("sim"),
             col("cell").cast(LongType).as("cell"))
-        // materialize the merge BEFORE either table write (the band-gate
-        // rule): it reads graphTable AND vecTable
-        val merged = graft.operators.Similarity.mergeKnnGraphTouchedCellsAssigned(
-            oldTouched, histA, batchA, idCol, degree,
-            batchMaterialized = true,
-            touchedCellsHint = Some(remainCells.toSeq))
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint(true)
-        try {
+        // pinned BEFORE either table write (the band-gate rule): the merge
+        // reads graphTable AND vecTable
+        CkptCycle.materialized(
+            graft.operators.Similarity.mergeKnnGraphTouchedCellsAssigned(
+              oldTouched, histA, batchA, idCol, degree,
+              batchMaterialized = true,
+              touchedCellsHint = Some(remainCells.toSeq))
+            .withColumn("batch_id", lit(batchId))) { merged =>
           // vectors APPEND as a batch_id partition — O(batch) bytes per
           // batch; a replay overwrites the same partition, so idempotence
           // needs no dedupe pass. Ids are unique across the stream (the
@@ -1288,14 +1253,8 @@ object Streams {
           // a task — then drop this or re-split by a secondary key)
           wh.writePartitions(graphTable, "cell",
             merged.repartition(col("cell")))
-        } finally merged.queryExecution.analyzed.foreach {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-          case _ => ()
         }
       }
-    } finally if (bAssign != null) bAssign.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
     writeBatchIdempotent(batch, outDir, batchId)
   }
@@ -1370,11 +1329,10 @@ object Streams {
     val tags = graft.operators.Dedup.tagAgainstBandIndex(
       afterExact, bandIdx.filter(col("batch_id") < batchId), idCol, textCol,
       shingleK, bands)
-    val accepted = afterExact.join(tags, Seq(idCol), "left")
-      .filter(!coalesce(col("is_near_dup"), lit(false)))
-      .drop("is_near_dup")
-      .localCheckpoint(true) // feeds both index appends and the sink
-    try {
+    // accepted feeds both index appends and the sink
+    CkptCycle.materialized(afterExact.join(tags, Seq(idCol), "left")
+        .filter(!coalesce(col("is_near_dup"), lit(false)))
+        .drop("is_near_dup")) { accepted =>
       // both indexes grow by the batch's SURVIVOR contribution only,
       // landed as idempotent batch_id partitions (r18 — the r17 shape
       // rewrote each whole index through a groupBy-dedupe + swap every
@@ -1389,9 +1347,6 @@ object Streams {
       wh.writePartition("band_index", "batch_id", batchId,
         graft.operators.Dedup.bandIndex(accepted, idCol, textCol, shingleK, bands))
       writeBatchIdempotent(accepted, outDir, batchId)
-    } finally accepted.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
     }
   }
 
@@ -1520,13 +1475,10 @@ object Streams {
     val cells = graft.operators.CountMin.sketch(batch, tokenCol, depth, width)
       .withColumn("batch_id", lit(batchId))
       .select(col("batch_id"), col("r"), col("bucket"), col("cnt"))
-    // materialize BEFORE the swap: `cur`'s lineage reads the table files the
+    // pinned BEFORE the swap: `cur`'s lineage reads the table files the
     // write below replaces (depth×width + history rows — tiny)
-    val merged = cur.unionByName(cells).localCheckpoint(true)
-    try { wh.write(table, merged); true }
-    finally merged.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
+    CkptCycle.materialized(cur.unionByName(cells)) { merged =>
+      wh.write(table, merged); true
     }
   }
 

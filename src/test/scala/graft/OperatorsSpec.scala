@@ -183,13 +183,31 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("CkptCycle.callSiteKey: stable per line, distinct across lines") {
-    def k() = graft.CkptCycle.callSiteKey("t")
+    // CallSiteKeyProbe stands in for an operator: the key skips every frame
+    // of the class that asks for it and lands on the line that called it
+    def k() = CallSiteKeyProbe.key()
     val a = k(); val b = k()
     assert(a == b, s"same call site must share a key: $a vs $b")
-    val c = graft.CkptCycle.callSiteKey("t")
-    val d = graft.CkptCycle.callSiteKey("t")
+    val c = CallSiteKeyProbe.key()
+    val d = CallSiteKeyProbe.key()
     assert(c != d, s"different lines must get distinct keys: $c")
-    assert(c.startsWith("t@"), c)
+    val (e, eLine) = (CallSiteKeyProbe.key(), new Throwable().getStackTrace()(0).getLineNumber)
+    assert(e == s"t@graft.OperatorsSpec:$eLine", s"key must land on the caller's line: $e")
+  }
+
+  test("CkptCycle.materialized releases its blocks when the body throws") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[IllegalStateException] {
+      graft.CkptCycle.materialized(spark.range(0, 100, 1, 4).toDF("id")) { df =>
+        assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+          "materialized() no longer pins its frame — test is vacuous")
+        assert(df.count() == 100L)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err.getMessage == "body failed")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "a throwing body left the checkpoint blocks pinned")
   }
 
   test("BFS hops: min distance from a multi-source seed set, hop-capped, unreachable absent") {
@@ -1384,4 +1402,12 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Profile.highNullColumns(df, 0.2) == Seq("v"))
     assert(Profile.duplicateRowCount(df.union(df)) == 3L)
   }
+}
+
+/** Calls [[CkptCycle.callSiteKey]] from inside a nested method, as an
+  * operator does.
+  */
+object CallSiteKeyProbe {
+  def key(): String = viaInner()
+  private def viaInner(): String = CkptCycle.callSiteKey("t")
 }

@@ -332,4 +332,20 @@ class PlanLintSpec extends AnyFunSuite {
     assert(!p.contains("LocalTableScan"),
       "sparse serve fast tier still joins driver-local relations")
   }
+
+  test("only CkptCycle.scala materializes a frame or walks LogicalRDD leaves to free blocks") {
+    // one checkpoint module: an eager localCheckpoint or a hand-copied
+    // unpersist walk anywhere else re-opens the per-site drift it replaced
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
+    val walk = """LogicalRDD\s*=>.*unpersist""".r
+    val offenders = for {
+      f <- java.nio.file.Files.walk(root).iterator().asScala.toList
+      if f.toString.endsWith(".scala") && f.getFileName.toString != "CkptCycle.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(".localCheckpoint(") || walk.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

@@ -649,7 +649,10 @@ class StreamsSpec extends AnyFunSuite {
     // ledger compaction: fold batches 0..2 into one committed fold
     // generation; batch 3 must compute the SAME remaining (0 for en) —
     // semantics unchanged, ledger shrunk to one fold + no delta files
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     Streams.compactLedger(spark, led, "lang", uptoBatchId = 3L)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore).isEmpty,
+      "compactLedger left its folded checkpoint blocks pinned")
     val ledFiles = new java.io.File(led).listFiles()
       .filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
     assert(ledFiles.map(_.getName).toSet == Set("fold-000000003"))
