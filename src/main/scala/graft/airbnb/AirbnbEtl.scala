@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   */
 object AirbnbEtl {
 
+  /** @param stats row count of each warehouse table (the tables of
+    *              `Warehouse.stats`), as observed on this run's writes: every
+    *              one is rewritten whole, so the rows written are its count
+    */
   final case class Result(wh: Warehouse, stats: Map[String, Long],
                           mergeActions: Map[String, Long])
 
@@ -45,25 +49,25 @@ object AirbnbEtl {
         org.apache.spark.sql.functions.when(col("action") === "update", 1)).as("update"),
       org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.when(col("action") === "keep", 1)).as("keep"))
-    wh.write("dim_listings", observed.drop("action"))
+    val listingsRows = wh.write("dim_listings", observed.drop("action"))
     val mergeActions = obs.get.collect {
       case (k, v: Long) if v > 0 => k -> v
     }.toMap
 
     val mapExisting = wh.readOrEmpty("dim_listing_id_map", Schemas.dimListingIdMap)
-    wh.write("dim_listing_id_map", Loaders.appendIdMap(cleanL, mapExisting))
+    val idMapRows = wh.write("dim_listing_id_map", Loaders.appendIdMap(cleanL, mapExisting))
 
     // ---- hosts, dates
     val dimListings = wh.read("dim_listings")
-    wh.write("dim_hosts", Loaders.loadHosts(dimListings))
+    val hostsRows = wh.write("dim_hosts", Loaders.loadHosts(dimListings))
     val dateSpan = cleanC.select(col("date")).unionByName(cleanR.select(col("date")))
-    wh.write("dim_dates", Loaders.loadDates(dateSpan, "date"))
+    val datesRows = wh.write("dim_dates", Loaders.loadDates(dateSpan, "date"))
 
     // ---- facts: partitioned by week for dynamic partition pruning, sorted
     // by listing_id within files so parquet row-group min/max stats take the
     // role of the reference's B-tree indexes (SURVEY §4,
     // sql/schema/04_create_indexes.sql)
-    wh.write("fact_calendar",
+    val calendarRows = wh.write("fact_calendar",
       Loaders.loadCalendar(cleanC, dimListings)
         .repartition(col("week_start_date"))
         .sortWithinPartitions(col("week_start_date"), col("listing_id")),
@@ -81,7 +85,7 @@ object AirbnbEtl {
     // would collapse the write to one task per distinct year — a parallelism
     // cliff on the biggest fact; range keeps many tasks per year while
     // partitionBy still splits the directories for pruning
-    wh.write("fact_reviews",
+    val reviewsRows = wh.write("fact_reviews",
       existingReviews.unionByName(newReviews)
         .repartitionByRange(col("review_year"), col("listing_id"))
         .sortWithinPartitions(col("review_year"), col("listing_id")),
@@ -95,7 +99,10 @@ object AirbnbEtl {
     wh.write("fact_reviews_enriched", Enrich.addReviewLang(wh.read("fact_reviews")))
     Views.register(spark, wh.read("dim_listings_enriched"))
 
-    Result(wh, wh.stats(), mergeActions)
+    val stats = Map("dim_listings" -> listingsRows, "dim_listing_id_map" -> idMapRows,
+      "dim_hosts" -> hostsRows, "dim_dates" -> datesRows,
+      "fact_calendar" -> calendarRows, "fact_reviews" -> reviewsRows)
+    Result(wh, stats, mergeActions)
   }
 
   /** §5 — the reference's debug-check corpus as invariant audits: returns

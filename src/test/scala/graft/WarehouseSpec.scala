@@ -36,6 +36,18 @@ class WarehouseSpec extends AnyFunSuite {
     assert(wh.compactSmallFiles("frag", targetBytes = 512L << 20) == after)
   }
 
+  test("write returns the rows it wrote, also for empty and partitioned frames") {
+    val wh = Warehouse(spark, java.nio.file.Files.createTempDirectory("wh-rows").toString)
+    val df = spark.range(0, 1000).select($"id", ($"id" % 7).as("k"))
+    assert(wh.write("plain", df.repartition(8)) == 1000L)
+    assert(wh.write("parts", df.filter($"id" < 100), partitionBy = Seq("k")) == 100L)
+    assert(wh.write("none", df.filter($"id" < 0)) == 0L)
+    assert(wh.write("folded", df.where("false")) == 0L) // optimized to an empty relation
+    val noPartitions = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+    assert(wh.write("zero", noPartitions) == 0L)
+  }
+
   test("write swap recovers from every crash window (roll forward / roll back)") {
     import java.io.File
     val root = java.nio.file.Files.createTempDirectory("wh-crash").toString
